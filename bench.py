@@ -185,6 +185,8 @@ def main() -> None:
                 "queries": results,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "duckdb_calib_sec": calib,
+                "cpus": spark.sparkContext.defaultParallelism,
+                "master": spark.sparkContext.master,
             }
         )
     )

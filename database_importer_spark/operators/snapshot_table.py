@@ -51,6 +51,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -77,20 +78,26 @@ def _manifest_path(loc: str, version: int) -> str:
     return os.path.join(_manifest_dir(loc), f"v{version:08d}.json")
 
 
-def latest_version(loc: str) -> int | None:
-    """Highest published manifest version, or None for no table."""
-    d = _manifest_dir(loc)
+def _numbered(d: str, prefix: str) -> list[tuple[int, str]]:
+    """(number, path) of every published ``{prefix}{N}.json`` in ``d``,
+    ascending; [] when ``d`` does not exist. Staged temp files
+    (``*.json.tmp.{pid}``) are never counted."""
     if not os.path.isdir(d):
-        return None
-    best = None
+        return []
+    out = []
     for name in os.listdir(d):
-        if name.startswith("v") and name.endswith(".json"):
+        if name.startswith(prefix) and name.endswith(".json"):
             try:
-                v = int(name[1:-5])
+                out.append((int(name[len(prefix) : -5]), os.path.join(d, name)))
             except ValueError:
                 continue
-            best = v if best is None else max(best, v)
-    return best
+    return sorted(out)
+
+
+def latest_version(loc: str) -> int | None:
+    """Highest published manifest version, or None for no table."""
+    found = _numbered(_manifest_dir(loc), "v")
+    return found[-1][0] if found else None
 
 
 def load_manifest(loc: str, version: int) -> dict:
@@ -105,22 +112,29 @@ def load_manifest(loc: str, version: int) -> dict:
     return hit
 
 
+def _publish_json(path: str, payload: dict) -> None:
+    """Publish ``payload`` at ``path`` atomically: staged to a temp
+    name, fsynced, then linked into place. link(2) fails with EEXIST
+    when the name is already claimed, so this raises FileExistsError —
+    the compare-and-swap behind every manifest, changelog, ref and
+    catalog entry."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + f".tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(payload, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, path)  # atomic, fails on EEXIST: the CAS
+    finally:
+        os.unlink(tmp)
+
+
 def _publish_manifest(loc: str, manifest: dict) -> None:
     """Atomically publish ``manifest`` as its version. Raises
     FileExistsError if a concurrent writer already claimed the
     version — the caller's optimistic-retry point."""
-    d = _manifest_dir(loc)
-    os.makedirs(d, exist_ok=True)
-    final = _manifest_path(loc, manifest["version"])
-    tmp = final + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, final)  # atomic, fails on EEXIST: the CAS
-    finally:
-        os.unlink(tmp)
+    _publish_json(_manifest_path(loc, manifest["version"]), manifest)
 
 
 def _col_min_max(md, name_to_idx, col):
@@ -326,6 +340,98 @@ def _carry_write_contract(manifest: dict, parent: dict) -> dict:
     return manifest
 
 
+def _write_stamped(
+    df: DataFrame,
+    loc: str,
+    parent: dict,
+    version: int,
+    files: int | None = None,
+    subdir: str | None = None,
+) -> list[dict]:
+    """Write ``df`` as data files of commit ``version`` under the
+    parent manifest's partition column and write contract, with the
+    commit sequence stamped on every new entry."""
+    return _stamp_seq(
+        _write_commit_files(
+            df,
+            loc,
+            version,
+            parent["part_col"],
+            files=files,
+            subdir=subdir,
+            **_table_write_opts(parent),
+        ),
+        version,
+    )
+
+
+# Every commit kind runs the same optimistic loop with this bound.
+_MAX_ATTEMPTS = 5
+
+
+def _attempt_dirs(loc: str, version: int) -> list[str]:
+    """The data dirs this process wrote while attempting ``version``.
+    Every commit writes under ``data/{kind}{version:08d}_{pid}`` with
+    an optional ``_{slice}`` suffix (``c`` data, ``d`` equality
+    deletes, ``cc`` consolidated changes), which is what makes a losing
+    attempt's orphans identifiable."""
+    d = os.path.join(loc, "data")
+    own = re.compile(rf"[a-z]+{version:08d}_{os.getpid()}(_\w+)?")
+    return [os.path.join(d, n) for n in os.listdir(d) if own.fullmatch(n)]
+
+
+def _commit(loc: str, what: str, attempt, expected_parent=None, published=None):
+    """The optimistic-commit loop of every commit kind (Delta's
+    commit-log protocol). Each attempt resolves the latest version
+    (FileNotFoundError when there is no table), returns None without
+    committing when ``expected_parent`` is given and the table is
+    elsewhere, and calls ``attempt(parent_manifest, version)``.
+
+    A non-dict result is returned as is, without committing: the kind's
+    no-op cases. A dict holds the child-manifest fields the kind
+    changes (``files``, ``deletes``, ``tags``, ``part_col``,
+    ``schema``, ``commit``, ``changes``); every other field is carried
+    from the parent, then the table's write contract. The child is
+    published with the link(2) CAS. A lost race removes the data dirs
+    the attempt wrote and recomputes against the winner's state;
+    ``published(manifest)`` runs only once the manifest has won."""
+    for _ in range(_MAX_ATTEMPTS):
+        base_v = latest_version(loc)
+        if base_v is None:
+            raise FileNotFoundError(f"no snapshot table at {loc}")
+        if expected_parent is not None and base_v != expected_parent:
+            return None
+        m = load_manifest(loc, base_v)
+        version = base_v + 1
+        changed = attempt(m, version)
+        if not isinstance(changed, dict):
+            return changed
+        manifest = {
+            "format": _FORMAT,
+            "version": version,
+            "parent": base_v,
+            "part_col": m["part_col"],
+            "schema": m["schema"],
+            "files": m["files"],
+            "deletes": _delete_entries(m),
+            "tags": _applied_tags(m),
+        }
+        manifest.update(changed)
+        try:
+            _publish_manifest(loc, _carry_write_contract(manifest, m))
+        except FileExistsError:
+            for d in _attempt_dirs(loc, version):
+                shutil.rmtree(d, ignore_errors=True)
+            continue
+        if published is not None:
+            published(manifest)
+        return version
+    raise RuntimeError(
+        f"{what} on {loc}: lost the optimistic-commit race "
+        f"{_MAX_ATTEMPTS} times"
+    )
+
+
 def _merge_cdf_frame(
     base: DataFrame,
     batch: DataFrame,
@@ -416,9 +522,9 @@ _CHANGE_TYPE_COL = "_change_type"
 
 
 def _change_file_entries(change_dir: str, loc: str) -> list[dict]:
-    """Manifest entries for a commit's materialized change files —
-    path + rows only (change files are consumed whole by version, so
-    no pruning stats are recorded)."""
+    """Manifest entries for a commit's materialized change (or
+    equality-delete) files — path + rows only (these are consumed
+    whole by version, so no pruning stats are recorded)."""
     import pyarrow.parquet as pq
 
     entries = []
@@ -669,7 +775,6 @@ def merge_snapshot_commit(
     join_on: list[str],
     part_of,  # callable: merged DataFrame -> partition-value Column
     touched: list,
-    max_attempts: int = 5,
     expected_parent: int | None = None,
 ) -> int | None:
     """File-granular copy-on-write MERGE, committed optimistically.
@@ -693,89 +798,50 @@ def merge_snapshot_commit(
     broadcast-join pass over the already-pruned slice) and records
     them in the manifest's ``changes`` field; ``read_changes`` then
     scans them instead of digest-diffing the step."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        if expected_parent is not None and base_v != expected_parent:
-            return None
+
+    def attempt(_parent, version):
         out, m, candidates = merge_snapshot_prewrite(
             spark, loc, batch, join_on, part_of, touched
         )
         # TOCTOU close (ADVICE r9): prewrite re-resolves the latest
-        # manifest, so a peer committing between the check above and
-        # the prewrite would land this merge on a parent !=
-        # expected_parent. Re-check against the manifest the write
-        # will actually parent on; the version+1 link CAS then closes
-        # the race completely.
+        # manifest, so a peer committing after _commit's check would
+        # land this merge on a parent != expected_parent. Re-check
+        # against the manifest the write actually parents on. Without
+        # a guard, a moved parent means version+1 is already claimed:
+        # the link CAS loses and the loop recomputes.
         if expected_parent is not None and m["version"] != expected_parent:
             return None
-        part_col = m["part_col"]
-        base_v = m["version"]
-        version = base_v + 1
-        new_files = _stamp_seq(
-            _write_commit_files(
-                out, loc, version, part_col, **_table_write_opts(m)
-            ),
-            version,
-        )
-        commit_info = {"op": "merge"}
-        manifest_changes = None
+        keep = {e["path"] for e in candidates}
+        # carried deletes still apply to carried files only: the
+        # rewritten candidates were read WITH deletes applied and
+        # their replacements carry seq=version > every delete seq.
+        changed = {
+            "files": [e for e in m["files"] if e["path"] not in keep]
+            + _write_stamped(out, loc, m, version),
+            "commit": {"op": "merge"},
+        }
         if m.get("cdf"):
             schema = T.StructType.fromJson(m["schema"])
             base = _read_with_deletes(
                 spark, loc, schema, candidates, _delete_entries(m)
             )
             ch = _merge_cdf_frame(
-                base, batch, join_on, part_col, part_of, schema
+                base, batch, join_on, m["part_col"], part_of, schema
             )
             change_dir = os.path.join(
                 loc, "data", f"c{version:08d}_{os.getpid()}_changes"
             )
             ch.write.mode("overwrite").parquet(change_dir)
-            manifest_changes = _change_file_entries(change_dir, loc)
-        keep = {e["path"] for e in candidates}
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": part_col,
-            "schema": m["schema"],
-            "files": [e for e in m["files"] if e["path"] not in keep]
-            + new_files,
-            # carried deletes still apply to carried files only: the
-            # rewritten candidates were read WITH deletes applied and
-            # their replacements carry seq=version > every delete seq.
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
-            "commit": commit_info,
-        }
-        if manifest_changes is not None:
-            manifest["changes"] = manifest_changes
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            # a peer claimed this version first: drop our orphaned
-            # commit dirs and recompute against the winner's state.
-            for sub in ("", "_changes"):
-                shutil.rmtree(
-                    os.path.join(
-                        loc, "data", f"c{version:08d}_{os.getpid()}{sub}"
-                    ),
-                    ignore_errors=True,
-                )
-    raise RuntimeError(
-        f"snapshot merge on {loc}: lost the optimistic-commit race "
-        f"{max_attempts} times"
-    )
+            changed["changes"] = _change_file_entries(change_dir, loc)
+        return changed
+
+    return _commit(loc, "snapshot merge", attempt, expected_parent)
 
 
 def evolve_snapshot_schema(
     spark: SparkSession,
     loc: str,
     new_fields: list[tuple[str, str]],
-    max_attempts: int = 5,
     exist_ok: bool = False,
 ) -> int:
     """ADD COLUMN as a METADATA-ONLY commit: the child manifest
@@ -793,11 +859,8 @@ def evolve_snapshot_schema(
     version CAS to an identical change is success, not failure), and
     if nothing remains to add the current version is returned with no
     commit."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        m = load_manifest(loc, base_v)
+
+    def attempt(m, _version):
         schema = T.StructType.fromJson(m["schema"])
         to_add = []
         for name, ddl in new_fields:
@@ -809,29 +872,12 @@ def evolve_snapshot_schema(
                 continue
             to_add.append((name, ddl))
         if exist_ok and not to_add:
-            return base_v
+            return m["version"]
         for name, ddl in to_add:
             schema = schema.add(name, ddl, True)
-        manifest = {
-            "format": _FORMAT,
-            "version": base_v + 1,
-            "parent": base_v,
-            "part_col": m["part_col"],
-            "schema": schema.jsonValue(),
-            "files": m["files"],
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
-            "commit": {"op": "evolve_schema"},
-        }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return base_v + 1
-        except FileExistsError:
-            continue  # pure metadata: nothing to clean, just recompute
-    raise RuntimeError(
-        f"snapshot schema evolution on {loc}: lost the optimistic-commit "
-        f"race {max_attempts} times"
-    )
+        return {"schema": schema.jsonValue(), "commit": {"op": "evolve_schema"}}
+
+    return _commit(loc, "snapshot schema evolution", attempt)
 
 
 def _check_append_schema(df: DataFrame, m: dict, loc: str) -> None:
@@ -863,7 +909,6 @@ def append_snapshot_commit(
     df: DataFrame,
     files: int | None = None,
     expected_parent: int | None = None,
-    max_attempts: int = 5,
 ) -> int | None:
     """INSERT-only fast path: write the new rows as new files and
     republish the parent's file list + the additions — no read of
@@ -879,52 +924,19 @@ def append_snapshot_commit(
     drifted append would otherwise be accepted silently and surface
     only at a later read as NULL columns or a runtime cast error far
     from the faulty commit."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        if expected_parent is not None and base_v != expected_parent:
-            return None
-        m = load_manifest(loc, base_v)
+
+    def attempt(m, version):
         _check_append_schema(df, m, loc)
-        version = base_v + 1
-        new_files = _stamp_seq(
-            _write_commit_files(
-                df,
-                loc,
-                version,
-                m["part_col"],
-                files=files,
-                **_table_write_opts(m),
-            ),
-            version,
-        )
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": m["part_col"],
-            "schema": m["schema"],
+        new_files = _write_stamped(df, loc, m, version, files=files)
+        return {
             "files": m["files"] + new_files,
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
             "commit": {
                 "op": "append",
                 "rows": sum(e["rows"] for e in new_files),
             },
         }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            shutil.rmtree(
-                os.path.join(loc, "data", f"c{version:08d}_{os.getpid()}"),
-                ignore_errors=True,
-            )
-    raise RuntimeError(
-        f"snapshot append on {loc}: lost the optimistic-commit race "
-        f"{max_attempts} times"
-    )
+
+    return _commit(loc, "snapshot append", attempt, expected_parent)
 
 
 def _load_manifest_retained(loc: str, version: int) -> dict:
@@ -1284,7 +1296,6 @@ def delete_where_commit(
     part_lo,
     part_hi,
     row_pred=None,
-    max_attempts: int = 5,
 ) -> int:
     """Row-level DELETE as a copy-on-write commit, with Iceberg's
     planning-time METADATA DELETE: the predicate is
@@ -1314,11 +1325,8 @@ def delete_where_commit(
     read with their applicable delete files applied, and carried
     deletes keep applying to carried files only (new files outrank
     them by seq)."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        m = load_manifest(loc, base_v)
+
+    def attempt(m, version):
         part_col = m["part_col"]
         schema = T.StructType.fromJson(m["schema"])
         carried, dropped, rewrite = [], [], []
@@ -1336,9 +1344,7 @@ def delete_where_commit(
                 dropped.append(e)
             else:
                 rewrite.append(e)
-        version = base_v + 1
         new_files: list[dict] = []
-        written_dirs: list[str] = []
         if rewrite:
             df = _read_with_deletes(
                 spark, loc, schema, rewrite, _delete_entries(m)
@@ -1374,31 +1380,11 @@ def delete_where_commit(
                     )
                 )
             for tag, cond in slices:
-                written_dirs.append(
-                    os.path.join(
-                        loc, "data", f"c{version:08d}_{os.getpid()}_{tag}"
-                    )
+                new_files += _write_stamped(
+                    kept.filter(cond), loc, m, version, subdir=tag
                 )
-                new_files += _stamp_seq(
-                    _write_commit_files(
-                        kept.filter(cond),
-                        loc,
-                        version,
-                        part_col,
-                        subdir=tag,
-                        **_table_write_opts(m),
-                    ),
-                    version,
-                )
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": part_col,
-            "schema": m["schema"],
+        return {
             "files": carried + new_files,
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
             "commit": {
                 "op": "delete_where",
                 "lo": part_lo,
@@ -1408,16 +1394,8 @@ def delete_where_commit(
                 "carried": len(carried),
             },
         }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            for d in written_dirs:
-                shutil.rmtree(d, ignore_errors=True)
-    raise RuntimeError(
-        f"snapshot delete on {loc}: lost the optimistic-commit race "
-        f"{max_attempts} times"
-    )
+
+    return _commit(loc, "snapshot delete", attempt)
 
 
 def delete_keys_commit(
@@ -1425,7 +1403,6 @@ def delete_keys_commit(
     loc: str,
     keys_df: DataFrame,
     key_cols: list[str],
-    max_attempts: int = 5,
     tag: str | None = None,
 ) -> int:
     """Row-level DELETE as a MERGE-ON-READ commit: equality-delete
@@ -1455,11 +1432,8 @@ def delete_keys_commit(
     files or re-erasing keys legitimately re-inserted since
     compaction. Concurrent first-timers may both land — harmless, the
     anti-join has set semantics — and every later run skips."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        m = load_manifest(loc, base_v)
+
+    def attempt(m, version):
         schema = T.StructType.fromJson(m["schema"])
         missing = [c for c in key_cols if c not in schema.names]
         if missing:
@@ -1476,8 +1450,7 @@ def delete_keys_commit(
             tag in _applied_tags(m)
             or any(d.get("tag") == tag for d in existing)
         ):
-            return base_v
-        version = base_v + 1
+            return m["version"]
         del_dir = os.path.join(loc, "data", f"d{version:08d}_{os.getpid()}")
         notnull = functools.reduce(
             lambda a, c: a & F.col(c).isNotNull(),
@@ -1487,34 +1460,15 @@ def delete_keys_commit(
         keys_df.select(*key_cols).filter(notnull).distinct().coalesce(
             1
         ).write.mode("overwrite").parquet(del_dir)
-        import pyarrow.parquet as pq
-
-        entries = []
-        for name in sorted(os.listdir(del_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            path = os.path.join(del_dir, name)
-            n = pq.ParquetFile(path).metadata.num_rows
-            if n:
-                e = {
-                    "path": os.path.relpath(path, loc),
-                    "rows": n,
-                    "seq": version,
-                    "key": list(key_cols),
-                }
-                if tag is not None:
-                    e["tag"] = tag
-                entries.append(e)
+        entries = _change_file_entries(del_dir, loc)
+        for e in entries:
+            e.update(seq=version, key=list(key_cols))
+            if tag is not None:
+                e["tag"] = tag
         if not entries:
             shutil.rmtree(del_dir, ignore_errors=True)
-            return base_v
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": m["part_col"],
-            "schema": m["schema"],
-            "files": m["files"],
+            return m["version"]
+        return {
             "deletes": existing + entries,
             "tags": _applied_tags(m) + ([tag] if tag is not None else []),
             "commit": {
@@ -1522,22 +1476,14 @@ def delete_keys_commit(
                 "keys": sum(e["rows"] for e in entries),
             },
         }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            shutil.rmtree(del_dir, ignore_errors=True)
-    raise RuntimeError(
-        f"snapshot equality delete on {loc}: lost the optimistic-commit "
-        f"race {max_attempts} times"
-    )
+
+    return _commit(loc, "snapshot equality delete", attempt)
 
 
 def compact_snapshot_commit(
     spark: SparkSession,
     loc: str,
     files: int | None = None,
-    max_attempts: int = 5,
     expected_parent: int | None = None,
 ) -> int | None:
     """Table maintenance as a commit: rewrite the CURRENT content into
@@ -1553,34 +1499,11 @@ def compact_snapshot_commit(
     version references them. ``expected_parent`` makes the OPTIMIZE
     conditional on the table version (None without committing when it
     moved) — the racing-process determinism guard, as on append/merge."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        if expected_parent is not None and base_v != expected_parent:
-            return None
-        m, _ = snapshot_files(loc, base_v)
-        part_col = m["part_col"]
-        df = read_snapshot(spark, loc, version=base_v)
-        version = base_v + 1
-        new_files = _stamp_seq(
-            _write_commit_files(
-                df,
-                loc,
-                version,
-                part_col,
-                files=files,
-                **_table_write_opts(m),
-            ),
-            version,
-        )
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": part_col,
-            "schema": m["schema"],
-            "files": new_files,
+
+    def attempt(m, version):
+        df = read_snapshot(spark, loc, version=m["version"])
+        return {
+            "files": _write_stamped(df, loc, m, version, files=files),
             # compaction reads THROUGH the deletes (read_snapshot
             # applies them), so the rewritten content has them
             # materialized — the child clears the delete list: this is
@@ -1589,25 +1512,14 @@ def compact_snapshot_commit(
             # of an old tagged erasure job commit again and delete keys
             # legitimately re-inserted since.
             "deletes": [],
-            "tags": _applied_tags(m),
             # the op tag is a CONTRACT statement: compaction is
             # content-preserving by construction, which is what lets
             # read_changes skip the step instead of digest-diffing the
             # whole table to discover an empty delta.
             "commit": {"op": "compact"},
         }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            shutil.rmtree(
-                os.path.join(loc, "data", f"c{version:08d}_{os.getpid()}"),
-                ignore_errors=True,
-            )
-    raise RuntimeError(
-        f"snapshot compact on {loc}: lost the optimistic-commit race "
-        f"{max_attempts} times"
-    )
+
+    return _commit(loc, "snapshot compact", attempt, expected_parent)
 
 
 # --- change-file compaction (VERDICT r10 seed): many small per-commit
@@ -1629,14 +1541,10 @@ def _changelog_dir(loc: str) -> str:
 
 def changelog_entries(loc: str) -> list[dict]:
     """All published change-file consolidation entries, oldest first."""
-    d = _changelog_dir(loc)
-    if not os.path.isdir(d):
-        return []
     out = []
-    for name in sorted(os.listdir(d)):
-        if name.startswith("e") and name.endswith(".json"):
-            with open(os.path.join(d, name)) as f:
-                out.append(json.load(f))
+    for _n, path in _numbered(_changelog_dir(loc), "e"):
+        with open(path) as f:
+            out.append(json.load(f))
     return out
 
 
@@ -1645,22 +1553,13 @@ def _publish_changelog_entry(loc: str, entry: dict) -> None:
     number race just takes the next number (entries are additive —
     read_changes prefers the newest covering entry)."""
     d = _changelog_dir(loc)
-    os.makedirs(d, exist_ok=True)
     while True:
-        n = len([x for x in os.listdir(d) if x.endswith(".json")])
-        final = os.path.join(d, f"e{n:08d}.json")
-        tmp = final + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-            f.flush()
-            os.fsync(f.fileno())
+        n = len(_numbered(d, "e"))
         try:
-            os.link(tmp, final)
+            _publish_json(os.path.join(d, f"e{n:08d}.json"), entry)
             return
         except FileExistsError:
             continue
-        finally:
-            os.unlink(tmp)
 
 
 def compact_changes_commit(
@@ -1669,7 +1568,6 @@ def compact_changes_commit(
     from_version: int,
     to_version: int,
     files: int = 1,
-    max_attempts: int = 5,
     expected_parent: int | None = None,
 ) -> int | None:
     """Consolidate the MATERIALIZED change files of every commit in
@@ -1688,13 +1586,9 @@ def compact_changes_commit(
     racing compactors serialize on the manifest CAS like every writer.
     Content-preserving by contract: the commit's op tag keeps
     read_changes/lag accounting treating the STEP itself as free."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        if expected_parent is not None and base_v != expected_parent:
-            return None
-        if not 0 <= from_version <= to_version <= base_v:
+
+    def attempt(m, version):
+        if not 0 <= from_version <= to_version <= m["version"]:
             raise ValueError(
                 f"bad compact_changes range v{from_version}..v{to_version}"
             )
@@ -1704,18 +1598,16 @@ def compact_changes_commit(
             if mv.get("changes"):
                 covered.append((v, mv["changes"]))
         if not covered:
-            return base_v
+            return m["version"]
         cover_versions = [v for v, _ in covered]
         for e in changelog_entries(loc):
             if set(cover_versions) <= set(e["covers"]):
                 return e["commit_version"]  # already consolidated
-        m = load_manifest(loc, base_v)
         schema = T.StructType.fromJson(m["schema"])
         ch_schema = T.StructType(
             [T.StructField(_CHANGE_TYPE_COL, T.StringType())]
             + list(schema.fields)
         )
-        version = base_v + 1
         out_dir = os.path.join(
             loc, "data", f"cc{version:08d}_{os.getpid()}"
         )
@@ -1736,43 +1628,33 @@ def compact_changes_commit(
             .write.mode("overwrite")
             .parquet(out_dir)
         )
-        entries_out = _change_file_entries(out_dir, loc)
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": m["part_col"],
-            "schema": m["schema"],
-            "files": m["files"],
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
+        return {
             "commit": {
                 "op": "compact_changes",
                 "from": from_version,
                 "to": to_version,
                 "covers": cover_versions,
-                "files": entries_out,
+                "files": _change_file_entries(out_dir, loc),
             },
         }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-        except FileExistsError:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            continue
+
+    def index(manifest):
+        # the sidecar entry is published only once the manifest won,
+        # so it never points at a losing attempt's (removed) files
+        c = manifest["commit"]
         _publish_changelog_entry(
             loc,
             {
-                "from": from_version,
-                "to": to_version,
-                "covers": cover_versions,
-                "files": entries_out,
-                "commit_version": version,
+                "from": c["from"],
+                "to": c["to"],
+                "covers": c["covers"],
+                "files": c["files"],
+                "commit_version": manifest["version"],
             },
         )
-        return version
-    raise RuntimeError(
-        f"change-file compaction on {loc}: lost the optimistic-commit "
-        f"race {max_attempts} times"
+
+    return _commit(
+        loc, "change-file compaction", attempt, expected_parent, index
     )
 
 
@@ -1781,7 +1663,6 @@ def replace_snapshot_commit(
     loc: str,
     df: DataFrame,
     files: int | None = None,
-    max_attempts: int = 5,
     expected_parent: int | None = None,
 ) -> int | None:
     """Full-content REPLACE (INSERT OVERWRITE) as one atomic commit —
@@ -1801,59 +1682,26 @@ def replace_snapshot_commit(
     would BE a table scan). The replaced frame is schema-validated at
     commit time like appends. ``expected_parent`` is the usual
     conditional-commit CAS."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        if expected_parent is not None and base_v != expected_parent:
-            return None
-        m = load_manifest(loc, base_v)
+
+    def attempt(m, version):
         _check_append_schema(df, m, loc)
-        version = base_v + 1
-        new_files = _stamp_seq(
-            _write_commit_files(
-                df,
-                loc,
-                version,
-                m["part_col"],
-                files=files,
-                **_table_write_opts(m),
-            ),
-            version,
-        )
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": m["part_col"],
-            "schema": m["schema"],
+        new_files = _write_stamped(df, loc, m, version, files=files)
+        return {
             "files": new_files,
             "deletes": [],
-            "tags": _applied_tags(m),
             "commit": {
                 "op": "replace",
                 "rows": sum(e["rows"] for e in new_files),
             },
         }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            shutil.rmtree(
-                os.path.join(loc, "data", f"c{version:08d}_{os.getpid()}"),
-                ignore_errors=True,
-            )
-    raise RuntimeError(
-        f"snapshot replace on {loc}: lost the optimistic-commit race "
-        f"{max_attempts} times"
-    )
+
+    return _commit(loc, "snapshot replace", attempt, expected_parent)
 
 
 def evolve_partition_spec(
     spark: SparkSession,
     loc: str,
     new_part_col: str,
-    max_attempts: int = 5,
 ) -> int:
     """PARTITION-SPEC EVOLUTION as a METADATA-ONLY commit (the
     Iceberg spec-evolution contract, near-trivial here because pruning
@@ -1874,14 +1722,11 @@ def evolve_partition_spec(
     manifest it parents on). Idempotent: evolving to the current spec
     returns the current version with no commit — racing peers
     converge."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        m = load_manifest(loc, base_v)
+
+    def attempt(m, _version):
         old_part = m["part_col"]
         if old_part == new_part_col:
-            return base_v
+            return m["version"]
         schema = T.StructType.fromJson(m["schema"])
         if new_part_col not in schema.names:
             raise ValueError(
@@ -1901,30 +1746,17 @@ def evolve_partition_spec(
             if stats:
                 e2["stats"] = stats
             migrated.append(e2)
-        manifest = {
-            "format": _FORMAT,
-            "version": base_v + 1,
-            "parent": base_v,
+        return {
             "part_col": new_part_col,
-            "schema": m["schema"],
             "files": migrated,
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
             "commit": {
                 "op": "evolve_partition_spec",
                 "from": old_part,
                 "to": new_part_col,
             },
         }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return base_v + 1
-        except FileExistsError:
-            continue  # pure metadata: nothing to clean, just recompute
-    raise RuntimeError(
-        f"partition-spec evolution on {loc}: lost the optimistic-commit "
-        f"race {max_attempts} times"
-    )
+
+    return _commit(loc, "partition-spec evolution", attempt)
 
 
 # --- named refs: tags (immutable) and branches (CAS-movable heads) ----
@@ -1940,21 +1772,6 @@ def evolve_partition_spec(
 
 def _refs_dir(loc: str, kind: str) -> str:
     return os.path.join(loc, "_refs", kind)
-
-
-def _write_ref_file(path: str, payload: dict) -> None:
-    """Publish ``payload`` at ``path`` atomically via link(2); raises
-    FileExistsError when the name is already claimed — the CAS."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, path)
-    finally:
-        os.unlink(tmp)
 
 
 def _check_ref_version(loc: str, version: int | None) -> int:
@@ -1977,7 +1794,7 @@ def create_tag(loc: str, name: str, version: int | None = None) -> int:
     version = _check_ref_version(loc, version)
     path = os.path.join(_refs_dir(loc, "tags"), f"{name}.json")
     try:
-        _write_ref_file(path, {"version": version})
+        _publish_json(path, {"version": version})
     except FileExistsError:
         with open(path) as f:
             existing = json.load(f)["version"]
@@ -1996,7 +1813,7 @@ def create_branch(loc: str, name: str, version: int | None = None) -> int:
     version = _check_ref_version(loc, version)
     path = os.path.join(_refs_dir(loc, "heads"), name, "r00000000.json")
     try:
-        _write_ref_file(path, {"version": version})
+        _publish_json(path, {"version": version})
     except FileExistsError:
         with open(path) as f:
             existing = json.load(f)["version"]
@@ -2011,19 +1828,10 @@ def create_branch(loc: str, name: str, version: int | None = None) -> int:
 def _branch_entries(
     loc: str, name: str, kind: str = "heads"
 ) -> list[tuple[int, str]]:
-    d = os.path.join(_refs_dir(loc, kind), name)
-    if not os.path.isdir(d):
-        raise KeyError(f"no {kind[:-1]} {name!r} at {loc}")
-    out = []
-    for n in os.listdir(d):
-        if n.startswith("r") and n.endswith(".json"):
-            try:
-                out.append((int(n[1:-5]), os.path.join(d, n)))
-            except ValueError:
-                continue
+    out = _numbered(os.path.join(_refs_dir(loc, kind), name), "r")
     if not out:
         raise KeyError(f"no {kind[:-1]} {name!r} at {loc}")
-    return sorted(out)
+    return out
 
 
 def branch_head_entry(
@@ -2076,7 +1884,7 @@ def update_branch(
         _refs_dir(loc, _kind), name, f"r{k + 1:08d}.json"
     )
     try:
-        _write_ref_file(nxt, {"version": new_version})
+        _publish_json(nxt, {"version": new_version})
     except FileExistsError:
         return False
     return True
@@ -2102,7 +1910,7 @@ def create_cursor(loc: str, name: str, version: int | None = None) -> int:
     version = _check_ref_version(loc, version)
     path = os.path.join(_refs_dir(loc, "cursors"), name, "r00000000.json")
     try:
-        _write_ref_file(path, {"version": version})
+        _publish_json(path, {"version": version})
     except FileExistsError:
         with open(path) as f:
             existing = json.load(f)["version"]
@@ -2412,18 +2220,8 @@ def _catalog_path(cat_loc: str, version: int) -> str:
 
 def catalog_latest(cat_loc: str) -> int | None:
     """Highest published catalog version, or None for no catalog."""
-    d = os.path.join(cat_loc, "_catalog")
-    if not os.path.isdir(d):
-        return None
-    best = None
-    for name in os.listdir(d):
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                v = int(name[1:-5])
-            except ValueError:
-                continue
-            best = v if best is None else max(best, v)
-    return best
+    found = _numbered(os.path.join(cat_loc, "_catalog"), "v")
+    return found[-1][0] if found else None
 
 
 def load_catalog(cat_loc: str, version: int | None = None) -> dict:
@@ -2460,18 +2258,8 @@ def catalog_commit(
         "parent": cur,
         "tables": tables,
     }
-    d = os.path.dirname(_catalog_path(cat_loc, version))
-    os.makedirs(d, exist_ok=True)
-    final = _catalog_path(cat_loc, version)
-    tmp = final + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(entry, f)
-        f.flush()
-        os.fsync(f.fileno())
     try:
-        os.link(tmp, final)
+        _publish_json(_catalog_path(cat_loc, version), entry)
     except FileExistsError:
         return None
-    finally:
-        os.unlink(tmp)
     return version

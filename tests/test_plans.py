@@ -879,6 +879,8 @@ def test_bench_line_stays_under_driver_tail():
             "queries": {k: 99.999 for k in HEADLINE},
             "sf": 0.1,
             "duckdb_calib_sec": 0.0175,
+            "cpus": 128,
+            "master": "local[128]",
         }
     )
     assert len(line) < 1950, (
@@ -935,6 +937,56 @@ def test_skew_join_builds_under_vanilla_byte_suffixed_conf(spark):
             frames.pop(k)  # do not leak a vanilla-conf-built plan
 
 
+_IMPURE_ATTRS = {
+    "localCheckpoint",
+    "cache",
+    "persist",
+    "createDataFrame",
+    "collect",
+    "count",
+    "isEmpty",
+    "toPandas",
+    "write",
+    "writeStream",
+    "foreachBatch",
+    "set",  # spark.conf.set / catalog mutation
+}
+
+
+def _impure_attrs(src: str) -> set[str]:
+    """Forbidden attribute uses in one builder's source."""
+    import ast
+
+    tree = ast.parse(src)
+    # one parent map per tree: nodes from a re-parse never match by
+    # identity, which is what made the df.count() branch vacuous
+    parents = {
+        child: node
+        for node in ast.walk(tree)
+        for child in ast.iter_child_nodes(node)
+    }
+    hits = set()
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Attribute):
+            continue
+        if node.attr == "count":
+            # the ACTION is the zero-arg method df.count();
+            # F.count(col) is the aggregate expression
+            call = parents.get(node)
+            if not (isinstance(call, ast.Call) and call.func is node):
+                continue
+            if call.args or call.keywords:
+                continue
+        if node.attr == "set":
+            # only conf mutation counts (x.conf.set(...))
+            v = node.value
+            if not (isinstance(v, ast.Attribute) and v.attr == "conf"):
+                continue
+        if node.attr in _IMPURE_ATTRS:
+            hits.add(node.attr)
+    return hits
+
+
 def test_cached_builders_are_pure_by_source():
     """Every declare(cache_frame=True) builder must be a PURE plan
     constructor: no checkpoint (would pin computed rows across
@@ -945,24 +997,21 @@ def test_cached_builders_are_pure_by_source():
     gets reviewed at flag time, but this catches the direct cases
     (r11 audit rule, pinned registry-wide in r12 when the flag set
     grew beyond the headline)."""
-    import ast
     import inspect
     import textwrap
 
-    forbidden_attrs = {
-        "localCheckpoint",
-        "cache",
-        "persist",
-        "createDataFrame",
-        "collect",
-        "count",
-        "isEmpty",
-        "toPandas",
-        "write",
-        "writeStream",
-        "foreachBatch",
-        "set",  # spark.conf.set / catalog mutation
-    }
+    # negative control: the scan must flag a seeded impure builder and
+    # pass the aggregate F.count(col)
+    seeded = textwrap.dedent(
+        """
+        def impure(spark, sf_dir):
+            df = spark.read.parquet(sf_dir)
+            n = df.count()
+            return df.groupBy("k").agg(F.count("v")).limit(n)
+        """
+    )
+    assert _impure_attrs(seeded) == {"count"}
+    assert _impure_attrs(seeded.replace("df.count()", "3")) == set()
     # llm_similarity_topk's ingestion collect is the one AUDITED
     # exception: memoized per corpus fingerprint since r7, with its
     # own zero-jobs-on-rebuild audit test — the returned frame still
@@ -979,28 +1028,7 @@ def test_cached_builders_are_pure_by_source():
         src = textwrap.dedent(
             inspect.getsource(inspect.unwrap(REGISTRY[key].fn))
         )
-        hits = set()
-        for node in ast.walk(ast.parse(src)):
-            if not isinstance(node, ast.Attribute):
-                continue
-            if node.attr == "count":
-                # the ACTION is the zero-arg method df.count();
-                # F.count(col) is the aggregate expression
-                parent_call = None
-                for c in ast.walk(ast.parse(src)):
-                    if isinstance(c, ast.Call) and c.func is node:
-                        parent_call = c
-                        break
-                if parent_call is None or parent_call.args or parent_call.keywords:
-                    continue
-            if node.attr == "set":
-                # only conf mutation counts (x.conf.set(...))
-                v = node.value
-                if not (isinstance(v, ast.Attribute) and v.attr == "conf"):
-                    continue
-            if node.attr in forbidden_attrs:
-                hits.add(node.attr)
-        hits -= whitelist.get(key, set())
+        hits = _impure_attrs(src) - whitelist.get(key, set())
         if hits:
             bad[key] = sorted(hits)
     assert not bad, f"impure cached builders: {bad}"

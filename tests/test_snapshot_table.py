@@ -11,15 +11,19 @@ claims the module makes:
   correctly AFTER a concurrent commit (the FAILED_READ_FILE class the
   dynamic-overwrite table had to be process-scoped for is structurally
   impossible here);
-- optimistic concurrency: a writer that loses the version race
-  retries against the winner's state, cleans up its orphan files, and
-  lands the correct content;
+- optimistic concurrency: a writer of any commit kind that loses the
+  version race retries against the winner's state, cleans up its
+  orphan files, and lands the correct content;
+- crash at publish: readers stay on the parent snapshot, vacuum
+  reclaims exactly the crashed attempt's files, and a re-run converges;
 - manifest pruning: a partition-scoped read hands the engine strictly
   fewer files (inputFiles pin), metadata-only;
 - vacuum retires exactly the unreferenced history and nothing the
   retained versions need.
 """
 
+import errno
+import glob
 import os
 import sys
 
@@ -34,7 +38,7 @@ from database_importer_spark.plans import REGISTRY  # noqa: E402
 SF = "/root/testdata/sf0.001"
 
 
-def _mk_table(spark, tmp_path, n=40):
+def _mk_table(spark, tmp_path, n=40, cdf=False):
     """Synthetic table: k (key), val, m = k // 10 (partition col)."""
     loc = str(tmp_path / "tbl")
 
@@ -45,7 +49,7 @@ def _mk_table(spark, tmp_path, n=40):
         )
         return df.withColumn("m", F.floor(F.col("k") / 10).cast("int"))
 
-    v = st.create_snapshot_table(spark, loc, src, "m", "k", files=4)
+    v = st.create_snapshot_table(spark, loc, src, "m", "k", files=4, cdf=cdf)
     assert v == 0
     return loc
 
@@ -124,38 +128,158 @@ def test_snapshot_reader_survives_concurrent_commit(spark, tmp_path):
     assert got[5] == "v5" and len(got) == 40
 
 
+# One commit of each kind, run on the table _kinds_base builds (v1).
+_COMMIT_KINDS = {
+    "merge": lambda spark, loc: st.merge_snapshot_commit(
+        spark, loc, _batch(spark, [(15, "UPD"), (105, "NEW")]), ["k"],
+        _part_of, touched=[1, 10],
+    ),
+    "evolve_schema": lambda spark, loc: st.evolve_snapshot_schema(
+        spark, loc, [("note", "string")]
+    ),
+    "append": lambda spark, loc: st.append_snapshot_commit(
+        spark, loc,
+        spark.createDataFrame([(200, "A", 20)], "k int, val string, m int"),
+    ),
+    # the residual predicate forces the rewrite of three slices
+    "delete_where": lambda spark, loc: st.delete_where_commit(
+        spark, loc, 1, 2, row_pred=lambda df: F.col("k") % 2 == 0
+    ),
+    "delete_keys": lambda spark, loc: st.delete_keys_commit(
+        spark, loc, _batch(spark, [(3, "x"), (17, "y")]).select("k"), ["k"]
+    ),
+    "compact": lambda spark, loc: st.compact_snapshot_commit(
+        spark, loc, files=2
+    ),
+    "compact_changes": lambda spark, loc: st.compact_changes_commit(
+        spark, loc, 0, 1
+    ),
+    "replace": lambda spark, loc: st.replace_snapshot_commit(
+        spark, loc,
+        spark.createDataFrame([(1, "R", 0), (22, "S", 2)], "k int, val string, m int"),
+    ),
+    "evolve_partition_spec": lambda spark, loc: st.evolve_partition_spec(
+        spark, loc, "k"
+    ),
+}
+_DATA_KINDS = [
+    k for k in _COMMIT_KINDS if k not in ("evolve_schema", "evolve_partition_spec")
+]
+
+
+def _kinds_base(spark, tmp_path):
+    """A cdf table at v1 whose merge materialized change files, so every
+    commit kind (compact_changes included) has work to do."""
+    loc = _mk_table(spark, tmp_path, cdf=True)
+    st.merge_snapshot_commit(
+        spark, loc, _batch(spark, [(5, "A")]), ["k"], _part_of, touched=[0]
+    )
+    return loc
+
+
+def _rows(spark, loc):
+    return sorted(
+        (tuple(r) for r in st.read_snapshot(spark, loc).collect()), key=repr
+    )
+
+
+def _parquet_files(loc):
+    return {
+        os.path.relpath(os.path.join(d, n), loc)
+        for d, _dirs, names in os.walk(os.path.join(loc, "data"))
+        for n in names
+        if n.endswith(".parquet")
+    }
+
+
+@pytest.fixture(scope="module")
+def kind_reference(spark, tmp_path_factory):
+    """Rows after a crash- and race-free commit of each kind."""
+    cache = {}
+
+    def get(kind):
+        if kind not in cache:
+            loc = _kinds_base(spark, tmp_path_factory.mktemp(f"ref_{kind}"))
+            assert _COMMIT_KINDS[kind](spark, loc) == 2
+            cache[kind] = _rows(spark, loc)
+        return cache[kind]
+
+    return get
+
+
+@pytest.mark.parametrize(
+    "kind,every_attempt_loses",
+    [pytest.param(k, False, id=k) for k in _COMMIT_KINDS]
+    + [pytest.param("merge", True, id="merge-every-attempt-loses")],
+)
 def test_optimistic_conflict_retries_and_cleans_orphans(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, kind_reference, kind, every_attempt_loses
 ):
-    loc = _mk_table(spark, tmp_path)
-    real_write = st._write_commit_files
+    loc = _kinds_base(spark, tmp_path)
+    dirs_before = set(os.listdir(os.path.join(loc, "data")))
+    real_publish = st._publish_manifest
     fired = {"done": False}
 
-    def racing_write(df, loc_, version, part_col, cluster_col=None, **kw):
-        files = real_write(df, loc_, version, part_col, cluster_col, **kw)
-        if not fired["done"]:
+    def racing_publish(loc_, manifest):
+        if every_attempt_loses or not fired["done"]:
             fired["done"] = True
             # a peer claims the same version first: same files as the
             # parent, bumped version — a pure-metadata competing commit
-            parent = st.load_manifest(loc_, version - 1)
-            st._publish_manifest(
-                loc_, {**parent, "version": version, "parent": version - 1}
-            )
-        return files
+            v, parent_v = manifest["version"], manifest["parent"]
+            parent = st.load_manifest(loc_, parent_v)
+            real_publish(loc_, {**parent, "version": v, "parent": parent_v})
+        real_publish(loc_, manifest)
 
-    monkeypatch.setattr(st, "_write_commit_files", racing_write)
-    v = st.merge_snapshot_commit(
-        spark, loc, _batch(spark, [(15, "UPD")]), ["k"], _part_of, touched=[1]
-    )
-    assert v == 2  # lost v1 to the peer, landed v2
-    assert _state(spark, loc)[15] == ("UPD", 1)
-    # the losing attempt's commit dir was removed
-    assert not os.path.exists(
-        os.path.join(loc, "data", f"c{1:08d}_{os.getpid()}")
-    )
+    monkeypatch.setattr(st, "_publish_manifest", racing_publish)
+    if every_attempt_loses:
+        with pytest.raises(RuntimeError, match="race 5 times"):
+            _COMMIT_KINDS[kind](spark, loc)
+        # no attempt left an orphan behind
+        assert set(os.listdir(os.path.join(loc, "data"))) == dirs_before
+        return
+    v = _COMMIT_KINDS[kind](spark, loc)
+    assert v == 3  # lost v2 to the peer, landed v3
+    assert _rows(spark, loc) == kind_reference(kind)
+    # the losing attempt's commit dirs were removed
+    assert not glob.glob(os.path.join(loc, "data", f"*{2:08d}_{os.getpid()}*"))
     # and no file of the loser leaked into the manifest
-    for e in st.load_manifest(loc, 2)["files"]:
+    m = st.load_manifest(loc, 3)
+    entries = m["files"] + m["deletes"] + m.get("changes", [])
+    for e in entries + m["commit"].get("files", []):
         assert os.path.exists(os.path.join(loc, e["path"]))
+    if kind == "compact_changes":
+        assert [e["commit_version"] for e in st.changelog_entries(loc)] == [3]
+
+
+@pytest.mark.parametrize("kind", _DATA_KINDS)
+def test_crash_at_publish_keeps_snapshot_and_rerun_converges(
+    spark, tmp_path, monkeypatch, kind_reference, kind
+):
+    """A crash at the link(2) publish of any data-writing commit leaves
+    readers on the parent snapshot, vacuum reclaims exactly the files
+    the crashed attempt wrote, and a re-run lands the crash-free
+    result."""
+    loc = _kinds_base(spark, tmp_path)
+    rows_before = _rows(spark, loc)
+    files_before = _parquet_files(loc)
+
+    def crash(_src, _dst):
+        raise OSError(errno.EIO, "injected crash at publish")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(st.os, "link", crash)
+        with pytest.raises(OSError) as exc:
+            _COMMIT_KINDS[kind](spark, loc)
+        assert exc.type is OSError
+    assert st.latest_version(loc) == 1
+    assert _rows(spark, loc) == rows_before
+    assert st.changelog_entries(loc) == []
+    orphans = _parquet_files(loc) - files_before
+    assert orphans
+    assert st.vacuum_snapshot(loc, keep_latest=2) == (0, len(orphans))
+    assert _parquet_files(loc) == files_before
+    assert _COMMIT_KINDS[kind](spark, loc) == 2
+    assert _rows(spark, loc) == kind_reference(kind)
 
 
 def test_manifest_pruning_hands_engine_fewer_files(spark, tmp_path):
