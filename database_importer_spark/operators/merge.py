@@ -39,10 +39,10 @@ staging).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from database_importer_spark.session import fingerprint
 
 _MATCH_FLAG = "__dbis_matched"
 
@@ -86,8 +86,8 @@ def _file_anchored_memo(spark, namespace: str) -> dict:
 # it costs two py4j round trips (analyzed-plan toString — a large
 # string — and inputFiles) plus the stats, ~50-100 ms on a merge
 # source. A DataFrame object's plan never changes, and every builder
-# hands Merger a FRESH object when the corpus changes (frame_cache /
-# footer-cache fingerprints gate object reuse), so object identity ⇒
+# hands Merger a FRESH object when the corpus changes (frame_cache and
+# the footer cache key on session.fingerprint), so object identity ⇒
 # same plan over same bytes. The one unsupported pattern: holding ONE
 # DataFrame across an in-place rewrite of its input files and
 # re-probing it — fresh construction (what every declared builder
@@ -101,8 +101,8 @@ _ANCHOR_BASE: "_weakref.WeakKeyDictionary[DataFrame, object]" = (
 
 def _file_anchored_key(frame: DataFrame, extra: tuple):
     """Memo key for a data-derived property of ``frame``: its
-    #id-stripped analyzed plan + the (path, size, mtime) of every
-    input file + ``extra``. Same plan over same bytes ⇒ same verdict.
+    #id-stripped analyzed plan + the (path, session.fingerprint) of
+    every input file + ``extra``. Same plan over same bytes ⇒ same verdict.
     Returns None when the frame has NO file anchors (checkpointed /
     LogicalRDD / createDataFrame sources): two different datasets
     would canonicalize identically after id-stripping, so those are
@@ -120,8 +120,7 @@ def _file_anchored_key(frame: DataFrame, extra: tuple):
             files = []
             for f in frame.inputFiles():
                 p = f.removeprefix("file:")
-                st = os.stat(p)
-                files.append((p, st.st_size, st.st_mtime_ns))
+                files.append((p, fingerprint(p)))
             base = (canonical, tuple(sorted(files))) if files else False
         except Exception:
             return None

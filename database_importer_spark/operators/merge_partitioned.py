@@ -51,6 +51,7 @@ from database_importer_spark.operators.partitioning import (
     _ENSURE_MEMO,
     _layout_lock,
 )
+from database_importer_spark.session import fingerprint, path_tag
 
 
 def ensure_live_target(
@@ -84,20 +85,15 @@ def ensure_live_target(
     import re
     import shutil
 
-    p = os.path.join(sf_dir, f"{source}.parquet")
-    st = os.stat(p)
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
+    fp = fingerprint(os.path.join(sf_dir, f"{source}.parquet"))
     key = ("live", owner, os.path.abspath(sf_dir), source, fp, part_col)
     hit = _ENSURE_MEMO.get(key)
     if hit is not None:
         return hit
-    dir_tag = "".join(
-        c if c.isalnum() else "_" for c in os.path.abspath(sf_dir)
-    ).lower()
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     pid = os.getpid()
     loc = os.path.join(
-        wh, f"dbis_live_{owner}_p{pid}_{source}_{dir_tag}_{fp}"
+        wh, f"dbis_live_{owner}_p{pid}_{source}_{path_tag(sf_dir)}_{fp}"
     )
     if not os.path.exists(os.path.join(loc, "_SUCCESS")):
         # GC sibling live tables whose owning process is dead (pid no

@@ -1,6 +1,6 @@
 """Partitioning strategies for scale (SURVEY.md §4.4): salted joins
 for skewed keys, bucketed tables for shuffle-free co-located joins,
-and join-aligned repartitioning.
+and hive-partitioned layouts for directory pruning.
 
 These are the knobs the 100 TB mandate names explicitly: AQE's skew
 split handles most skew at runtime; salting is the static fallback
@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from database_importer_spark.session import fingerprint, path_tag
 
 SALT = "__dbis_salt"
 
@@ -117,16 +119,17 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-# Warm-path memo for the ensure_* helpers: (memo_token, sf_dir,
-# source fingerprint, args) → table name / path. Plan
+# Warm-path memo for the ensure_* helpers: (kind, memo_token, sf_dir,
+# source, session.fingerprint, args) → table name / path. Plan
 # canonicalization (a py4j analyzed-plan round trip) and catalog
 # existence checks cost ~100-150 ms per query invocation once the
 # layout exists — pure per-query constant. A call site may opt in by
 # passing a unique memo_token, PROMISING its df derivation is fixed
 # code for that token (the token stands in for the canonical plan AND
 # the column set in the memo key; the content-addressed table name
-# still guards cross-process reuse on first touch). The source-file
-# fingerprint stays in the key, so a regenerated corpus invalidates.
+# still guards cross-process reuse on first touch). The source
+# fingerprint stays in the key, so a regenerated corpus — or one
+# rewritten part file of a directory-shaped source — invalidates.
 #
 # Call sites with a memo_token should pass ``df`` as a ZERO-ARG
 # CALLABLE returning the DataFrame: constructing the source df is
@@ -149,7 +152,7 @@ def ensure_bucketed_layout(
     """Build (at most once per session) a persistent bucketed copy of
     ``df`` — the projected/derived image of ``{sf_dir}/{source}.parquet``
     — bucketed AND sorted on ``keys``, and return its catalog table
-    name. The name encodes (sf_dir, source-file fingerprint, the df's
+    name. The name encodes (sf_dir, source fingerprint, the df's
     CANONICALIZED LOGICAL PLAN, keys, bucket count), so a layout
     widened with more columns, re-bucketed differently, or derived
     through a different transformation (a filter, a different join)
@@ -169,13 +172,10 @@ def ensure_bucketed_layout(
     one-file-per-bucket invariant the session's sorted-bucket
     ordering flag depends on."""
     import hashlib
-    import os
     import re
     import shutil
 
-    p = os.path.join(sf_dir, f"{source}.parquet")
-    st = os.stat(p)
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
+    fp = fingerprint(os.path.join(sf_dir, f"{source}.parquet"))
     memo_key = None
     if memo_token is not None:
         # the token stands in for the df's derivation (incl. columns),
@@ -206,10 +206,7 @@ def ensure_bucketed_layout(
         + f"|{buckets}"
     )
     shape_tag = hashlib.md5(shape.encode()).hexdigest()[:8]
-    dir_tag = "".join(
-        c if c.isalnum() else "_" for c in os.path.abspath(sf_dir)
-    ).lower()
-    table = f"dbis_bkt_{source}_{dir_tag}_{fp}_{shape_tag}"
+    table = f"dbis_bkt_{source}_{path_tag(sf_dir)}_{fp}_{shape_tag}"
 
     def done(name):
         if memo_key is not None:
@@ -289,13 +286,10 @@ def ensure_partitioned_layout(
     whole directories at PLAN time — the scan-bound cost becomes
     proportional to the queried range, not the corpus."""
     import hashlib
-    import os
     import re
     import shutil
 
-    p = os.path.join(sf_dir, f"{source}.parquet")
-    st = os.stat(p)
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
+    fp = fingerprint(os.path.join(sf_dir, f"{source}.parquet"))
     memo_key = None
     if memo_token is not None:
         memo_key = (
@@ -317,11 +311,10 @@ def ensure_partitioned_layout(
         + "|" + str(cluster_col)
     )
     shape_tag = hashlib.md5(shape.encode()).hexdigest()[:8]
-    dir_tag = "".join(
-        c if c.isalnum() else "_" for c in os.path.abspath(sf_dir)
-    ).lower()
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    loc = os.path.join(wh, f"dbis_part_{source}_{dir_tag}_{fp}_{shape_tag}")
+    loc = os.path.join(
+        wh, f"dbis_part_{source}_{path_tag(sf_dir)}_{fp}_{shape_tag}"
+    )
 
     def done(path):
         if memo_key is not None:
@@ -435,10 +428,3 @@ def bucketed_join(
     """Join two same-bucketed tables — Catalyst recognizes the
     co-partitioning from the catalog and plans a shuffle-free SMJ."""
     return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
-
-
-def repartition_for_join(df: DataFrame, keys: list[str], partitions: int) -> DataFrame:
-    """Pre-shuffle once on the join keys so several downstream joins/
-    aggs on the same keys reuse one Exchange (Catalyst reuses a
-    matching output partitioning instead of re-shuffling)."""
-    return df.repartition(partitions, *[F.col(k) for k in keys])

@@ -41,8 +41,10 @@ from __future__ import annotations
 
 import os
 
+from database_importer_spark.session import fingerprint, parquet_files
+
 # threshold is a pure function of the file bytes — safe to memoize
-# process-wide on (abspath, size, mtime_ns, column, k). BOUNDED
+# process-wide on (abspath, session.fingerprint, column, k). BOUNDED
 # (VERDICT r7 hygiene 3): keys embed file fingerprints, so a
 # long-lived process cycling corpora would otherwise grow it for
 # process lifetime. FIFO eviction is fine — the workload re-reads the
@@ -60,27 +62,8 @@ class _BoundedCache(dict):
 
 _THRESHOLD_CACHE: dict[tuple, float | None] = _BoundedCache()
 
-# exact footer MAX per (files fingerprint, column) — same class
+# exact footer MAX per (path fingerprint, column) — same class
 _FOOTER_MAX_CACHE: dict[tuple, int | None] = _BoundedCache()
-
-
-def _parquet_files(path: str) -> list[str]:
-    """A testdata table is one .parquet file; a Spark-written table is
-    a directory of part files. Accept both."""
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    return [path]
-
-
-def _fingerprint(files: list[str], col: str, k: int) -> tuple:
-    parts = [(os.path.abspath(f),) + tuple(
-        (lambda s: (s.st_size, s.st_mtime_ns))(os.stat(f))
-    ) for f in files]
-    return (tuple(parts), col, k)
 
 
 def topk_prune_threshold(path: str, col: str, k: int) -> float | None:
@@ -92,10 +75,10 @@ def topk_prune_threshold(path: str, col: str, k: int) -> float | None:
     import numpy as np
     import pyarrow.parquet as pq
 
-    files = _parquet_files(path)
-    key = _fingerprint(files, col, k)
+    key = (os.path.abspath(path), fingerprint(path), col, k)
     if key in _THRESHOLD_CACHE:
         return _THRESHOLD_CACHE[key]
+    files = parquet_files(path)
 
     # (stats_max, file, rg_index) for every row group; None max → no
     # stats for that group → it can never be pruned, but it also
@@ -166,13 +149,12 @@ def footer_exact_max(path: str, col: str) -> int | None:
     groups are stats-less or all-NULL, fall back)."""
     import pyarrow.parquet as pq
 
-    files = _parquet_files(path)
-    key = _fingerprint(files, col, -1)
+    key = (os.path.abspath(path), fingerprint(path), col)
     if key in _FOOTER_MAX_CACHE:
         return _FOOTER_MAX_CACHE[key]
 
     out: int | None = None
-    for f in files:
+    for f in parquet_files(path):
         md = pq.ParquetFile(f).metadata
         schema = md.schema.to_arrow_schema()
         try:

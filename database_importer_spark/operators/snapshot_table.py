@@ -117,17 +117,20 @@ def _publish_json(path: str, payload: dict) -> None:
     name, fsynced, then linked into place. link(2) fails with EEXIST
     when the name is already claimed, so this raises FileExistsError —
     the compare-and-swap behind every manifest, changelog, ref and
-    catalog entry."""
+    catalog entry. The temp name is removed whichever step fails."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = path + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
     try:
+        with open(tmp, "w") as f:
+            json.dump(payload, f)
+            f.flush()
+            os.fsync(f.fileno())
         os.link(tmp, path)  # atomic, fails on EEXIST: the CAS
     finally:
-        os.unlink(tmp)
+        try:
+            os.unlink(tmp)
+        except FileNotFoundError:
+            pass  # open() itself failed: nothing was staged
 
 
 def _publish_manifest(loc: str, manifest: dict) -> None:

@@ -20,7 +20,7 @@ from database_importer_spark.operators import dedup as D
 from database_importer_spark.operators import multimodal as M
 from database_importer_spark.operators import similarity as S
 from database_importer_spark.operators import textstats as X
-from database_importer_spark.session import static_plan_session
+from database_importer_spark.session import fingerprint, static_plan_session
 from database_importer_spark.plans.registry import DEC, dec4_sum, declare, t
 
 # --- dedup ----------------------------------------------------------
@@ -667,10 +667,8 @@ def llm_similarity_topk(spark, sf_dir):
     from database_importer_spark.session import session_cache
 
     e = t(spark, sf_dir, "embeddings")
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:8]
+    fp = fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}|{fp}".encode()).hexdigest()[:8]
     memo = session_cache(spark, "similarity_query_ingestion")
     q_rows = memo.get(tag)
     if q_rows is None:

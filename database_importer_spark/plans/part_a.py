@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from database_importer_spark.operators.merge import Merger, candidate_key_check
 from database_importer_spark.plans.registry import DEC, declare, frame_cache, t
+from database_importer_spark.session import fingerprint, path_tag
 
 # Shared oracle fragment: the derived update source (matches
 # _updates_df below, column for column).
@@ -765,15 +766,12 @@ def _snap_loc(spark, sf_dir, name="upsert"):
     state."""
     import os
 
-    p = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(p)
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    dir_tag = "".join(
-        c if c.isalnum() else "_" for c in os.path.abspath(sf_dir)
-    ).lower()
+    fp = fingerprint(os.path.join(sf_dir, "orders.parquet"))
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     token = _snap_contract_token(name)
-    return os.path.join(wh, f"dbis_snap_{name}_{dir_tag}_{fp}_{token}")
+    return os.path.join(
+        wh, f"dbis_snap_{name}_{path_tag(sf_dir)}_{fp}_{token}"
+    )
 
 
 def _snap_batch_touched(spark, sf_dir, loc):
@@ -1746,10 +1744,8 @@ def table_vacuum_retention(spark, sf_dir):
     from database_importer_spark.scratch import scratch_dir
     import os
 
-    st_ = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    loc = os.path.join(
-        scratch_dir(f"vret_{st_.st_size}_{st_.st_mtime_ns}"), "tbl"
-    )
+    fp = fingerprint(os.path.join(sf_dir, "orders.parquet"))
+    loc = os.path.join(scratch_dir(f"vret_{fp}"), "tbl")
     _snap_create_at(spark, sf_dir, loc)
     create_tag(loc, "audit_v0", version=0)
     for parent in (0, 1):

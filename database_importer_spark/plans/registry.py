@@ -24,7 +24,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from database_importer_spark.session import session_cache
+from database_importer_spark.session import fingerprint, session_cache
 
 
 @dataclass
@@ -78,14 +78,15 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-# Temp-view memo: (session, sf_dir, table, file fingerprint) → view
+# Temp-view memo: (session, sf_dir, table, session.fingerprint) → view
 # name. Lets a declared plan be ONE spark.sql(...) call instead of a
 # chain of py4j DataFrame calls: each DataFrame method is a Python→JVM
 # round trip (~5-10 ms), so a six-way join built through the API costs
 # ~150-200 ms of pure construction per invocation, while one sql()
 # call parses+analyzes entirely JVM-side (~40 ms measured for the same
-# q5 shape at sf10). The file fingerprint keys invalidation: a
-# regenerated corpus re-registers the view over the fresh schema.
+# q5 shape at sf10). The fingerprint keys invalidation: a regenerated
+# corpus, or one rewritten part file of a directory-shaped table,
+# re-registers the view over the fresh files.
 # Stored per live session via session.session_cache (ADVICE r6: an
 # id(spark) key could alias a recycled session id).
 
@@ -97,9 +98,8 @@ def sql_view(spark: SparkSession, sf_dir: str, name: str) -> str:
     import hashlib
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    st = os.stat(path)
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}".encode()
+        f"{os.path.abspath(sf_dir)}|{fingerprint(path)}".encode()
     ).hexdigest()[:8]
     vname = f"dbis_v_{name}_{tag}"
     memo = session_cache(spark, "sql_views")
@@ -116,28 +116,18 @@ def frame_cache(spark: SparkSession, sf_dir: str, name: str, build):
     builder only re-pays py4j/analysis construction (40-130 ms
     measured on the window/agg shapes). Sound ONLY for builders that
     are pure functions of the corpus (no mutable tables, no layout
-    side effects beyond their own memoized ensure_*); the fingerprint
-    covers every *.parquet in sf_dir so a regenerated corpus rebuilds.
+    side effects beyond their own memoized ensure_*); the key holds
+    the session.fingerprint of every *.parquet in sf_dir (file- or
+    directory-shaped), so a regenerated corpus rebuilds.
     The cache dies with the session (session_cache WeakKey)."""
     cache = session_cache(spark, "declared_frames")
     d = os.path.abspath(sf_dir)
-    # ADVICE r11: directory-shaped *.parquet entries (scaled corpora
-    # write part files under lineitem.parquet/) must fingerprint their
-    # CONTENTS — a dir's own size/mtime does not change when a
-    # same-named part file is rewritten in place.
-    fp = []
-    for n in sorted(os.listdir(d)):
-        if not n.endswith(".parquet"):
-            continue
-        p = os.path.join(d, n)
-        if os.path.isdir(p):
-            for m in sorted(os.listdir(p)):
-                st = os.stat(os.path.join(p, m))
-                fp.append((f"{n}/{m}", st.st_size, st.st_mtime_ns))
-        else:
-            st = os.stat(p)
-            fp.append((n, st.st_size, st.st_mtime_ns))
-    k = (name, d, tuple(fp))
+    fp = tuple(
+        (n, fingerprint(os.path.join(d, n)))
+        for n in sorted(os.listdir(d))
+        if n.endswith(".parquet")
+    )
+    k = (name, d, fp)
     df = cache.get(k)
     if df is None:
         df = build()

@@ -24,7 +24,7 @@ from database_importer_spark.plans.registry import (
     frame_cache,
     t,
 )
-from database_importer_spark.session import static_plan_session
+from database_importer_spark.session import parquet_files, static_plan_session
 
 def orderkey_bucketed_facts(spark, sf_dir, buckets: int = 32):
     """The shared persistent orderkey-bucketed layout of the two fact
@@ -961,14 +961,9 @@ def join_skew_aqe(spark, sf_dir):
     # ~800 slices, scheduling-bound), a fixed big one never fires at
     # small sf. lineitem_bytes/64 keeps ~a few dozen slices for the
     # hot 80% at any scale, floored at 512k so sf0.1 still qualifies.
-    li_path = _os.path.join(sf_dir, "lineitem.parquet")
-    li_bytes = (
-        sum(
-            _os.path.getsize(_os.path.join(li_path, n))
-            for n in _os.listdir(li_path)
-        )
-        if _os.path.isdir(li_path)
-        else _os.path.getsize(li_path)
+    li_bytes = sum(
+        _os.path.getsize(f)
+        for f in parquet_files(_os.path.join(sf_dir, "lineitem.parquet"))
     )
     target = max(512 * 1024, li_bytes // 64)
     for k in (
@@ -1239,9 +1234,9 @@ def maintenance_compact_small_files(spark, sf_dir):
     base = scratch_dir("compact")
     frag, compact = base + "/frag", base + "/compact"
     li.repartition(64).write.mode("overwrite").parquet(frag)
-    n_before = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
+    n_before = len(parquet_files(frag))
     spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compact)
-    n_after = len([f for f in os.listdir(compact) if f.endswith(".parquet")])
+    n_after = len(parquet_files(compact))
     return spark.read.parquet(compact).agg(
         F.lit(n_before).cast("int").alias("n_files_before"),
         F.lit(n_after).cast("int").alias("n_files_after"),

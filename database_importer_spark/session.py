@@ -19,8 +19,10 @@ where we pin the configs that matter at 100 TB:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
+import stat
 
 from pyspark.sql import SparkSession
 
@@ -306,3 +308,47 @@ def session_cache(spark: SparkSession, namespace: str) -> dict:
         caches = {}
         _SESSION_CACHES[spark] = caches
     return caches.setdefault(namespace, {})
+
+
+# The one cache key for everything memoized on the bytes of a parquet
+# table (footer schemas, temp views, built frames, layout and table
+# names, zone maps, the Merger anchor, query ingestion). A directory's
+# own size/mtime do not change when a part file is rewritten in place,
+# so a directory-shaped table is keyed on its part files.
+
+
+def parquet_files(path: str) -> list[str]:
+    """Sorted data files of a parquet table: ``[path]`` for a single
+    file, else every ``*.parquet`` under the directory, recursing into
+    subdirectories (hive partitions)."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(d, n)
+        for d, _dirs, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet")
+    )
+
+
+def fingerprint(path: str) -> str:
+    """Filename-safe cache key for the bytes under ``path``. A file is
+    ``{size}_{mtime_ns}`` (the format every content-addressed layout
+    name already embeds); a directory is a digest over the relative
+    path and fingerprint of each of its ``parquet_files``. Raises what
+    ``os.stat`` raises."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return f"{st.st_size}_{st.st_mtime_ns}"
+    parts = "|".join(
+        f"{os.path.relpath(f, path)}:{fingerprint(f)}" for f in parquet_files(path)
+    )
+    return hashlib.md5(parts.encode()).hexdigest()[:16]
+
+
+def path_tag(path: str) -> str:
+    """``path`` made absolute and flattened to a lowercase identifier
+    fragment, for catalog table and directory names."""
+    return "".join(
+        c if c.isalnum() else "_" for c in os.path.abspath(path)
+    ).lower()

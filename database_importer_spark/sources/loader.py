@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from database_importer_spark.session import fingerprint
+
 # The ten driver-generated tables (TESTDATA.md). Order matters only
 # for display; keys are the canonical table names used everywhere.
 TABLES = [
@@ -79,12 +81,12 @@ def _ensure_nanos_readable(spark: SparkSession) -> None:
 # footer on EVERY read.parquet call — ~80 ms per call on the
 # 489-row-group sf10 lineitem (489 × 16 column-chunk entries), paid
 # by every query's construction. The schema is a pure function of
-# the file bytes, so cache it on (path, size, mtime_ns) and hand it
-# to the reader explicitly; any rewrite of the file invalidates the
-# key. At 100 TB this is what a catalog does for you — table schemas
-# resolve from metadata, not from re-reading data-file footers per
-# query.
-_SCHEMA_CACHE: dict[tuple[str, int, int], T.StructType] = {}
+# the file bytes, so cache it on (path, session.fingerprint) and hand
+# it to the reader explicitly; any rewrite of the file — or of one part
+# file of a directory-shaped table — invalidates the key. At 100 TB
+# this is what a catalog does for you — table schemas resolve from
+# metadata, not from re-reading data-file footers per query.
+_SCHEMA_CACHE: dict[tuple[str, str], T.StructType] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -92,8 +94,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _ensure_nanos_readable(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        st = os.stat(path)
-        key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
+        key = (os.path.abspath(path), fingerprint(path))
     except OSError:
         key = None  # missing/odd path: let the reader raise its error
     if key is not None and key in _SCHEMA_CACHE:

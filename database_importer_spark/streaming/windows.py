@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from database_importer_spark.plans.registry import dec4_sum
+from database_importer_spark.session import fingerprint, parquet_files
 
 # events parquet physical schemas. Historically the driver generated
 # ts as TIMESTAMP(NANOS) (surfaces as bigint under nanosAsLong and is
@@ -45,17 +46,12 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
     Footer-only read on the driver — no data pages touched. Handles
     both a single file and a directory-style parquet dataset (picks
     the first part file; one dataset writes one physical type)."""
-    import glob
-
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(path):
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if not parts:
-            return False
-        path = parts[0]
-    ts_type = pq.read_schema(path).field("ts").type
+    parts = parquet_files(os.path.join(sf_dir, "events.parquet"))
+    if not parts:
+        return False
+    ts_type = pq.read_schema(parts[0]).field("ts").type
     return getattr(ts_type, "unit", None) == "ns"
 
 _QCOUNTER = [0]
@@ -125,10 +121,7 @@ def read_events_stream_sliced(
     _ensure_nanos_readable(spark)
     sf_dir = os.path.abspath(sf_dir)
     path = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(path)
-    tag = hashlib.md5(
-        f"{sf_dir}_{st.st_size}_{st.st_mtime_ns}".encode()
-    ).hexdigest()[:10]
+    tag = hashlib.md5(f"{sf_dir}_{fingerprint(path)}".encode()).hexdigest()[:10]
     d = os.path.join(scratch_dir(f"events_sliced_{slices}"), tag)
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         if _events_ts_is_nanos(sf_dir):
@@ -149,12 +142,9 @@ def read_events_stream_sliced(
         # slice order — so the stream replays time FORWARD and the
         # watermark advances at every batch instead of jumping to the
         # end on a last-slice-first pickup
-        parts = sorted(
-            n for n in os.listdir(d) if n.endswith(".parquet")
-        )
-        base = os.stat(os.path.join(d, parts[0])).st_mtime
-        for i, n in enumerate(parts):
-            p = os.path.join(d, n)
+        parts = parquet_files(d)
+        base = os.stat(parts[0]).st_mtime
+        for i, p in enumerate(parts):
             os.utime(p, (base + i * 10, base + i * 10))
     schema = spark.read.parquet(d).schema
     return (

@@ -1034,6 +1034,59 @@ def test_cached_builders_are_pure_by_source():
     assert not bad, f"impure cached builders: {bad}"
 
 
+def _mtime_key_sites(src: str, scope: str) -> set[str]:
+    """Dotted names of the functions in ``src`` that read
+    ``st_mtime_ns`` (``scope`` itself for module-level reads)."""
+    import ast
+
+    hits = set()
+
+    def walk(node, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            scope = f"{scope}.{node.name}"
+        if (isinstance(node, ast.Attribute) and node.attr == "st_mtime_ns") or (
+            isinstance(node, ast.Constant) and node.value == "st_mtime_ns"
+        ):
+            hits.add(scope)
+        for child in ast.iter_child_nodes(node):
+            walk(child, scope)
+
+    walk(ast.parse(src), scope)
+    return hits
+
+
+def test_one_stat_fingerprint_in_package():
+    """Every corpus-keyed cache keys on session.fingerprint: a cache
+    that stats a path itself would see a directory's own size/mtime,
+    which an in-place part-file rewrite leaves unchanged. So
+    ``st_mtime_ns`` may be read by that one function only."""
+    import os
+    import textwrap
+
+    import database_importer_spark
+
+    # negative control: the scan must flag a seeded per-site stat key
+    seeded = textwrap.dedent(
+        """
+        def layout_name(sf_dir):
+            st = os.stat(sf_dir)
+            return f"dbis_bkt_{st.st_size}_{st.st_mtime_ns}"
+        """
+    )
+    assert _mtime_key_sites(seeded, "seed") == {"seed.layout_name"}
+    assert _mtime_key_sites(seeded.replace("st_mtime_ns", "st_size"), "s") == set()
+    pkg = os.path.dirname(database_importer_spark.__file__)
+    sites = set()
+    for d, _dirs, names in os.walk(pkg):
+        for n in names:
+            if n.endswith(".py"):
+                p = os.path.join(d, n)
+                mod = os.path.relpath(p, pkg)[:-3].replace(os.sep, ".")
+                with open(p) as f:
+                    sites |= _mtime_key_sites(f.read(), mod)
+    assert sites == {"session.fingerprint"}
+
+
 def _ckpt_lineage_ids(df):
     """All RDD ids in the LINEAGE of every LogicalRDD (lazy-checkpoint)
     leaf — the checkpoint child itself is always fresh (.map makes a

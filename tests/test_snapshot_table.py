@@ -251,26 +251,32 @@ def test_optimistic_conflict_retries_and_cleans_orphans(
         assert [e["commit_version"] for e in st.changelog_entries(loc)] == [3]
 
 
-@pytest.mark.parametrize("kind", _DATA_KINDS)
+@pytest.mark.parametrize(
+    "kind,crash_at",
+    [pytest.param(k, "link", id=k) for k in _DATA_KINDS]
+    + [pytest.param(k, "fsync", id=f"{k}-fsync") for k in _DATA_KINDS],
+)
 def test_crash_at_publish_keeps_snapshot_and_rerun_converges(
-    spark, tmp_path, monkeypatch, kind_reference, kind
+    spark, tmp_path, monkeypatch, kind_reference, kind, crash_at
 ):
-    """A crash at the link(2) publish of any data-writing commit leaves
-    readers on the parent snapshot, vacuum reclaims exactly the files
-    the crashed attempt wrote, and a re-run lands the crash-free
-    result."""
+    """A crash at the manifest temp write (fsync) or at the link(2)
+    publish of any data-writing commit leaves readers on the parent
+    snapshot and no staged temp manifest behind, vacuum reclaims
+    exactly the files the crashed attempt wrote, and a re-run lands the
+    crash-free result."""
     loc = _kinds_base(spark, tmp_path)
     rows_before = _rows(spark, loc)
     files_before = _parquet_files(loc)
 
-    def crash(_src, _dst):
-        raise OSError(errno.EIO, "injected crash at publish")
+    def crash(*_args):
+        raise OSError(errno.EIO, f"injected crash at {crash_at}")
 
     with monkeypatch.context() as mp:
-        mp.setattr(st.os, "link", crash)
+        mp.setattr(st.os, crash_at, crash)
         with pytest.raises(OSError) as exc:
             _COMMIT_KINDS[kind](spark, loc)
         assert exc.type is OSError
+    assert not glob.glob(os.path.join(loc, "**", "*.tmp.*"), recursive=True)
     assert st.latest_version(loc) == 1
     assert _rows(spark, loc) == rows_before
     assert st.changelog_entries(loc) == []
